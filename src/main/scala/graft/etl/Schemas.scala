@@ -49,6 +49,15 @@ object Schemas {
     "date_time", "open_price", "high_price", "low_price", "close_price",
     "volume_btc", "volume_currency", "weighted_price")
 
+  /** The date-partitioned sink as read back: the sink columns plus the
+    * `date` partition column. Readers pass it explicitly, so a sink whose
+    * only content is a crashed write's `_temporary/` reads as empty instead
+    * of failing schema inference. */
+  val sink: StructType = StructType(
+    StructField("date_time", TimestampType, nullable = true) +:
+      sinkCols.tail.map(StructField(_, DoubleType, nullable = true)) :+
+      StructField("date", DateType, nullable = true))
+
   /** Filename pattern `btcusd-YYYY-MM-DD.csv`, anchored both ends; combined
     * with a strict date parse this reproduces utils.py:5-15 exactly
     * (prefix + length-21 + strptime). */

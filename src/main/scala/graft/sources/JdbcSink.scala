@@ -1,7 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
-
 import graft.etl.Schemas
 
 /** JDBC append sink — the reference's real sink is Postgres/TimescaleDB
@@ -24,8 +22,8 @@ import graft.etl.Schemas
   * writer options END-TO-END against a live Derby database (write, then
   * partitioned parallel read back, oracle-verified). The Postgres-
   * specific DDL builders below stay unit-tested (JdbcSinkSpec); the
-  * parquet sink remains the production-path analog (sinkAppendDb,
-  * BtcPipeline.backfill).
+  * pipeline's sink is the date-partitioned parquet lake
+  * (BtcPipeline.backfill / watch).
   */
 object JdbcSink {
 
@@ -71,20 +69,12 @@ object JdbcSink {
   }
 
   /** TimescaleDB hypertable conversion incl. the migrate-existing-data
-    * flag (btc_etl.py:99-101); the partitioned-parquet analog is
-    * ParquetMigrate.toDatePartitioned. */
+    * flag (btc_etl.py:99-101); the partitioned-parquet analog is the
+    * date-partitioned layout BtcPipeline writes from the first append. */
   def createHypertableDdl(table: String): String = {
     require(table.matches("[A-Za-z_][A-Za-z0-9_]*"), s"unsafe table name: $table")
     s"SELECT create_hypertable('$table', 'date_time', if_not_exists => TRUE, migrate_data => TRUE)"
   }
-
-  /** Append a sink-shaped frame through JDBC. The writer coalesces to
-    * `numPartitions` tasks = connections; rows stream in `batchsize`
-    * chunks. Requires a reachable database + driver on the classpath —
-    * see object scaladoc. */
-  def append(df: DataFrame, o: JdbcOptions): Unit =
-    df.select(Schemas.sinkCols.map(org.apache.spark.sql.functions.col): _*)
-      .write.format("jdbc").options(writerOptions(o)).mode("append").save()
 
   /** Does `table` exist at `url`? Probed through `DatabaseMetaData
     * .getTables` on a short-lived connection — the precise

@@ -1,13 +1,11 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import graft.etl.{EtlConfig, ParquetMigrate, Schemas}
+import graft.etl.{EtlConfig, Schemas}
 import graft.sources.JdbcSink
 import graft.sources.JdbcSink.JdbcOptions
 
 /** The DB-sink surface without a live database: option/DDL builders are
-  * pinned exactly; the partitioned-migration path runs end to end on
-  * parquet. */
+  * pinned exactly. */
 class JdbcSinkSpec extends SparkSpec {
 
   test("writerOptions maps batching/pool knobs to the jdbc writer keys") {
@@ -64,37 +62,5 @@ class JdbcSinkSpec extends SparkSpec {
       sys.props -= "TABLE_NAME"
       sys.props -= "ENABLE_MULTITHREADING"
     }
-  }
-
-  test("appendBatch dispatches on the sink target (parquet writes; jdbc reaches the writer)") {
-    val rows = graft.etl.BtcPipeline.transform(spark, "/root/reference/dataset-test")
-      .filter(to_date(col("date_time")) === lit("2012-01-01"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sinktgt-").toString
-    graft.etl.BtcPipeline.appendBatch(rows, graft.etl.ParquetSink(s"$tmp/sink"))
-    assert(spark.read.parquet(s"$tmp/sink").count() === rows.count())
-    assert(new java.io.File(s"$tmp/sink").listFiles().exists(_.getName.startsWith("date=")))
-    // no database/driver in the sandbox: the dispatch must still reach the
-    // jdbc writer and fail there (driver resolution), not earlier
-    val e = intercept[Exception] {
-      graft.etl.BtcPipeline.appendBatch(rows.limit(1),
-        graft.etl.JdbcTarget(EtlConfig.jdbcOptions))
-    }
-    val msg = (e.getMessage + e.getClass.getName).toLowerCase
-    assert(msg.contains("driver") || msg.contains("jdbc") || msg.contains("connection"),
-      s"expected a jdbc-layer failure, got: $e")
-  }
-
-  test("ParquetMigrate: unpartitioned sink rows land date-partitioned, none lost") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-migrate-").toString
-    val flat = graft.etl.BtcPipeline.transform(spark, "/root/reference/dataset-test")
-      .filter(to_date(col("date_time")) <= lit("2012-01-03"))
-    flat.write.mode("overwrite").parquet(s"$tmp/flat")
-    ParquetMigrate.toDatePartitioned(spark, s"$tmp/flat", s"$tmp/part")
-    val back = spark.read.parquet(s"$tmp/part")
-    assert(back.count() === flat.count())
-    assert(new java.io.File(s"$tmp/part").listFiles().exists(_.getName.startsWith("date=")))
-    // partition pruning works on the migrated layout
-    val pruned = back.filter(col("date") === lit("2012-01-01"))
-    assert(pruned.count() === flat.filter(to_date(col("date_time")) === lit("2012-01-01")).count())
   }
 }

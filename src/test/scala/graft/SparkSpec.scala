@@ -22,4 +22,12 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   val sf = "/root/testdata/sf0.001"
+
+  /** Runs `body` on a fresh temporary directory and deletes the directory
+    * afterwards, whether or not `body` throws. */
+  def withTempDir[T](body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-")
+    try body(dir.toString)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
 }
