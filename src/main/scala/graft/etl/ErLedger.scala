@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Graph, Linkage}
+import graft.queries.Staging.withConf
 
 /** Incremental entity-resolution state as bucketed on-disk stores — the
   * 100 TB form of streaming golden-record maintenance, where every
@@ -269,204 +270,200 @@ object ErLedger {
       fwdDir: String, goldenDir: String): Unit = {
     val b = batch.graftCheckpoint() // consumed by write + bucket probe + pair gen
     val ss = b.sparkSession
-    // Scoped for the fold (restored in the finally): parquet pushes IN
-    // row-group filters only up to inFilterThreshold values (default
-    // 10), which would disable the sorted-blk_key prune for any batch
-    // touching more than 10 blocks — i.e. for every realistic batch.
-    val inKey = "spark.sql.parquet.pushdown.inFilterThreshold"
-    val prevConf = Seq(inKey -> ss.conf.get(inKey))
-    ss.conf.set(inKey, InPushdownCap.toString)
-    // The batch's distinct block hashes, ONE bounded collect (`limit`
-    // runs before the pull): the bucket list derives from them on the
-    // driver. Past BlockListCap blocks the batch is a bulk load — skip
-    // pruning and read the whole prefix it would touch anyway.
-    val fine = b.select(blkKey(col("c_nationkey"), col("c_mktsegment")).as("k"))
-      .distinct().limit(BlockListCap + 1).collect().map(_.getInt(0)).toSeq
-    val bb = if (fine.length > BlockListCap) None
-      else Some(fine.map(k => math.floorMod(k, HistBuckets)).distinct)
-    val fineKeys = if (fine.length <= InPushdownCap) Some(fine) else None
-    // History FIRST, so every later read in this or any retried batch
-    // sees a complete prefix. Per-batch dir overwrite = replay-idempotent.
-    // Rows are sorted by blk_key inside each bucket file so parquet
-    // row-group stats prune the fine-grained reads.
-    b.withColumn("blk_key", blkKey(col("c_nationkey"), col("c_mktsegment")))
-      .withColumn("blk_bucket", pmod(col("blk_key"), lit(HistBuckets)))
-      .sortWithinPartitions("blk_bucket", "blk_key")
-      .write.partitionBy("blk_bucket").mode("overwrite")
-      .parquet(s"$histDir/ingest_batch=$batchId")
-    // The touched-block history prefix: persisted because both the
-    // candidate join and the member fetch read it — O(touched blocks)
-    // rows by the pruning above, never the corpus.
-    val histPrev = readHist(ss, histDir, bb, fineKeys,
-      col("ingest_batch") < batchId).persist(lvl)
-    try {
-      import ss.implicits._
-      // The fwd table, localized behind a cap: ONE bounded pull makes
-      // the steady-state batch's state transitions memory-resident —
-      // the contraction joins broadcast a LocalRelation for free, the
-      // fold and member-preimage run on the driver, and the
-      // touched-bucket set needs no Spark job. Past FwdLocalCap rows
-      // every step falls back to the distributed frame; the cap bounds
-      // the collect the same way DriverCcCap bounds the pair pull.
-      val fwdLocal: Option[Map[Long, Long]] = {
-        val vs = fwdVersions(ss, fwdDir).filter(_ < batchId)
-        if (vs.isEmpty) Some(Map.empty[Long, Long])
-        else {
-          val r = ss.read.parquet(s"$fwdDir/v=${vs.max}")
-            .limit(FwdLocalCap + 1).collect()
-          if (r.length <= FwdLocalCap)
-            Some(r.map(x => x.getLong(0) -> x.getLong(1)).toMap)
-          else None
-        }
-      }
-      val fwd: DataFrame = fwdLocal match {
-        case Some(m) => m.toSeq.toDF("retired", "cur")
-        case None => readFwdBefore(ss, fwdDir, batchId)
-      }
-      // Contract pairs to CURRENT labels through the fwd table —
-      // intra-cluster pairs vanish; what remains is the bridging-label
-      // graph, O(batch pairs) at any corpus size. With a LOCAL fwd map
-      // the contraction runs on the driver over the raw pair pull (no
-      // broadcast joins, no distinct exchange in the hot job); with a
-      // distributed fwd it runs as broadcast joins before the pull.
-      // Either pull is `limit`-bounded by DriverCcCap; past the cap the
-      // distributed CC fixpoint takes over.
-      // r17: THREE-tier, size-adaptive pair generation over the pruned
-      // history (every tier emits IDENTICAL pairs — the maxDist ≤ 2
-      // deletion-neighborhood completeness argument; ErLedgerSpec pins
-      // the boundary equalities across tiers):
-      //   - below Linkage.BoundedIncrementalMinHist pruned rows, the
-      //     exhaustive block cross — one verify join, the cheapest
-      //     per-batch plan while |batch|·|hist-block| is small (the r16
-      //     unconditional bounded tier paid its fixed multi-exchange
-      //     barrier chain here for nothing);
-      //   - above it, the bounded tier fed from the STORED core index
-      //     (`_vars`): history is hashed once per ingest, not once per
-      //     micro-batch — re-hashing was the fold's last history-linear
-      //     per-batch compute. The count() is on the already-persisted
-      //     frame the pair join consumes anyway.
-      val histN = histPrev.count()
-      val pairs =
-        if (histN < Linkage.BoundedIncrementalMinHist)
-          Linkage.blockedPairsIncremental(b, histPrev, maxDist = 2)
-        else {
-          val varsDir = varsDirOf(histDir)
-          ensureVars(ss, histDir, varsDir, batchId)
-          writeVars(b, varsDir, batchId) // own rows, for future folds
-          Linkage.boundedPairsIncrementalIndexed(b,
-            readVars(ss, varsDir, bb, fineKeys, col("ingest_batch") < batchId),
-            histPrev, maxDist = 2)
-        }
-      lazy val cp = {
-        val f = fwd // force the frame only on this path
-        pairs
-          .join(broadcast(f.select(col("retired").as("ra"), col("cur").as("ca0"))),
-            col("cust_a") === col("ra"), "left")
-          .join(broadcast(f.select(col("retired").as("rb"), col("cur").as("cb0"))),
-            col("cust_b") === col("rb"), "left")
-          .select(coalesce(col("ca0"), col("cust_a")).as("ca"),
-            coalesce(col("cb0"), col("cust_b")).as("cb"))
-          .filter(col("ca") =!= col("cb"))
-          .select(col("ca").as("src"), col("cb").as("dst")).distinct()
-      }
-      val edgesLocal: Option[Array[(Long, Long)]] = fwdLocal match {
-        case Some(fm) =>
-          val raw = pairs.select(col("cust_a"), col("cust_b"))
-            .limit(DriverCcCap + 1).collect()
-          if (raw.length > DriverCcCap) None
-          else Some(raw.map { r =>
-            (fm.getOrElse(r.getLong(0), r.getLong(0)),
-              fm.getOrElse(r.getLong(1), r.getLong(1)))
-          }.filter(e => e._1 != e._2))
-        case None =>
-          val raw = cp.limit(DriverCcCap + 1).collect()
-          if (raw.length > DriverCcCap) None
-          else Some(raw.map(r => (r.getLong(0), r.getLong(1))))
-      }
-      // Driver-side union-find over the contracted edges. Union by min
-      // root keeps labels = min member ids — the invariant that makes
-      // maintained state equal the batch recompute.
-      val mergeLocal: Option[Seq[(Long, Long)]] = edgesLocal.map { es =>
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-          r
-        }
-        es.foreach { case (ea, eb) =>
-          val (a, b2) = (find(ea), find(eb))
-          if (a != b2) { if (a < b2) parent(b2) = a else parent(a) = b2 }
-        }
-        parent.keys.toSeq.map(n => n -> find(n))
-          .filter { case (n, c) => n != c }
-      }
-      (fwdLocal, mergeLocal) match {
-        case (_, Some(mg)) if mg.isEmpty => () // no merges: no state change
-        case (Some(fm), Some(mg)) =>
-          // Steady-state path, everything driver-resident: fold the
-          // merge through the fwd map in memory (remap existing values,
-          // append the retired labels — keeps the single-hop invariant),
-          // one tiny LocalRelation write per store, member preimage and
-          // touched buckets with zero extra jobs. Writes only v=batchId
-          // from state strictly below it, so replay rewrites the same
-          // bytes.
-          val mgMap = mg.toMap
-          val newFwdRows =
-            fm.toSeq.map { case (r, c) => (r, mgMap.getOrElse(c, c)) } ++ mg
-          newFwdRows.toDF("retired", "cur").coalesce(1)
-            .write.mode("overwrite").parquet(s"$fwdDir/v=$batchId")
-          val mergedNew = mg.map(_._2).distinct
-          val mset = mergedNew.toSet
-          val memberLab =
-            (newFwdRows.filter(p => mset(p._2)) ++ mergedNew.map(c => (c, c)))
-              .toDF("member", "cluster_id")
-          val touched = (mg.map(_._1) ++ mg.map(_._2)).distinct
-          goldenRefresh(ss, goldenDir, batchId,
-            redoneOf(b, histPrev, memberLab),
-            touched.toDF("cluster_id"),
-            touched.map(pkBucketLocal).toSet)
-        case (_, ml) =>
-          // Bulk regime (fwd or the pair graph past its cap): the same
-          // transitions as distributed frames. fwd fold reads only
-          // versions below batchId and writes v=batchId — no
-          // read-your-own-write, so replay stays byte-identical.
-          val merge = ml match {
-            case Some(mg) => mg.toDF("retired", "cur")
-            case None => Graph.connectedComponents(cp)
-              .filter(col("node") =!= col("comp_id"))
-              .select(col("node").as("retired"), col("comp_id").as("cur"))
-              .graftCheckpoint() // consumed 3× below
+    // Scoped for the fold: parquet pushes IN row-group filters only up to
+    // inFilterThreshold values (default 10), which would disable the
+    // sorted-blk_key prune for any batch touching more than 10 blocks —
+    // i.e. for every realistic batch.
+    withConf(ss, "spark.sql.parquet.pushdown.inFilterThreshold" -> InPushdownCap.toString) {
+      // The batch's distinct block hashes, ONE bounded collect (`limit`
+      // runs before the pull): the bucket list derives from them on the
+      // driver. Past BlockListCap blocks the batch is a bulk load — skip
+      // pruning and read the whole prefix it would touch anyway.
+      val fine = b.select(blkKey(col("c_nationkey"), col("c_mktsegment")).as("k"))
+        .distinct().limit(BlockListCap + 1).collect().map(_.getInt(0)).toSeq
+      val bb = if (fine.length > BlockListCap) None
+        else Some(fine.map(k => math.floorMod(k, HistBuckets)).distinct)
+      val fineKeys = if (fine.length <= InPushdownCap) Some(fine) else None
+      // History FIRST, so every later read in this or any retried batch
+      // sees a complete prefix. Per-batch dir overwrite = replay-idempotent.
+      // Rows are sorted by blk_key inside each bucket file so parquet
+      // row-group stats prune the fine-grained reads.
+      b.withColumn("blk_key", blkKey(col("c_nationkey"), col("c_mktsegment")))
+        .withColumn("blk_bucket", pmod(col("blk_key"), lit(HistBuckets)))
+        .sortWithinPartitions("blk_bucket", "blk_key")
+        .write.partitionBy("blk_bucket").mode("overwrite")
+        .parquet(s"$histDir/ingest_batch=$batchId")
+      // The touched-block history prefix: persisted because both the
+      // candidate join and the member fetch read it — O(touched blocks)
+      // rows by the pruning above, never the corpus.
+      val histPrev = readHist(ss, histDir, bb, fineKeys,
+        col("ingest_batch") < batchId).persist(lvl)
+      try {
+        import ss.implicits._
+        // The fwd table, localized behind a cap: ONE bounded pull makes
+        // the steady-state batch's state transitions memory-resident —
+        // the contraction joins broadcast a LocalRelation for free, the
+        // fold and member-preimage run on the driver, and the
+        // touched-bucket set needs no Spark job. Past FwdLocalCap rows
+        // every step falls back to the distributed frame; the cap bounds
+        // the collect the same way DriverCcCap bounds the pair pull.
+        val fwdLocal: Option[Map[Long, Long]] = {
+          val vs = fwdVersions(ss, fwdDir).filter(_ < batchId)
+          if (vs.isEmpty) Some(Map.empty[Long, Long])
+          else {
+            val r = ss.read.parquet(s"$fwdDir/v=${vs.max}")
+              .limit(FwdLocalCap + 1).collect()
+            if (r.length <= FwdLocalCap)
+              Some(r.map(x => x.getLong(0) -> x.getLong(1)).toMap)
+            else None
           }
-          val newFwd = fwd
-            .join(merge.select(col("retired").as("mr"), col("cur").as("mc")),
-              fwd("cur") === col("mr"), "left")
-            .select(fwd("retired"), coalesce(col("mc"), fwd("cur")).as("cur"))
-            .unionByName(merge)
-          newFwd.write.mode("overwrite").parquet(s"$fwdDir/v=$batchId")
-          val fwdNow = ss.read.parquet(s"$fwdDir/v=$batchId")
-          // Members of every refreshed cluster, straight off the fwd
-          // table: preimage(cur) ∪ {cur} — no corpus scan, no map store.
-          val mergedNew = merge.select(col("cur")).distinct()
-          val memberLab = fwdNow.join(mergedNew, Seq("cur"), "left_semi")
-            .select(col("retired").as("member"), col("cur").as("cluster_id"))
-            .unionByName(mergedNew
-              .select(col("cur").as("member"), col("cur").as("cluster_id")))
-          val touched = merge.select(col("retired").as("cluster_id"))
-            .unionByName(merge.select(col("cur").as("cluster_id"))).distinct()
-          val tb = ml match {
-            case Some(mg) =>
-              (mg.map(_._1) ++ mg.map(_._2)).map(pkBucketLocal).toSet
-            case None => touched.select(pkBucket(col("cluster_id")).as("b"))
-              .distinct().collect().map(_.getInt(0)).toSet
+        }
+        val fwd: DataFrame = fwdLocal match {
+          case Some(m) => m.toSeq.toDF("retired", "cur")
+          case None => readFwdBefore(ss, fwdDir, batchId)
+        }
+        // Contract pairs to CURRENT labels through the fwd table —
+        // intra-cluster pairs vanish; what remains is the bridging-label
+        // graph, O(batch pairs) at any corpus size. With a LOCAL fwd map
+        // the contraction runs on the driver over the raw pair pull (no
+        // broadcast joins, no distinct exchange in the hot job); with a
+        // distributed fwd it runs as broadcast joins before the pull.
+        // Either pull is `limit`-bounded by DriverCcCap; past the cap the
+        // distributed CC fixpoint takes over.
+        // r17: THREE-tier, size-adaptive pair generation over the pruned
+        // history (every tier emits IDENTICAL pairs — the maxDist ≤ 2
+        // deletion-neighborhood completeness argument; ErLedgerSpec pins
+        // the boundary equalities across tiers):
+        //   - below Linkage.BoundedIncrementalMinHist pruned rows, the
+        //     exhaustive block cross — one verify join, the cheapest
+        //     per-batch plan while |batch|·|hist-block| is small (the r16
+        //     unconditional bounded tier paid its fixed multi-exchange
+        //     barrier chain here for nothing);
+        //   - above it, the bounded tier fed from the STORED core index
+        //     (`_vars`): history is hashed once per ingest, not once per
+        //     micro-batch — re-hashing was the fold's last history-linear
+        //     per-batch compute. The count() is on the already-persisted
+        //     frame the pair join consumes anyway.
+        val histN = histPrev.count()
+        val pairs =
+          if (histN < Linkage.BoundedIncrementalMinHist)
+            Linkage.blockedPairsIncremental(b, histPrev, maxDist = 2)
+          else {
+            val varsDir = varsDirOf(histDir)
+            ensureVars(ss, histDir, varsDir, batchId)
+            writeVars(b, varsDir, batchId) // own rows, for future folds
+            Linkage.boundedPairsIncrementalIndexed(b,
+              readVars(ss, varsDir, bb, fineKeys, col("ingest_batch") < batchId),
+              histPrev, maxDist = 2)
           }
-          goldenRefresh(ss, goldenDir, batchId,
-            redoneOf(b, histPrev, memberLab), touched, tb)
-      }
-    } finally {
-      histPrev.unpersist()
-      prevConf.foreach { case (k, v) => ss.conf.set(k, v) }
+        lazy val cp = {
+          val f = fwd // force the frame only on this path
+          pairs
+            .join(broadcast(f.select(col("retired").as("ra"), col("cur").as("ca0"))),
+              col("cust_a") === col("ra"), "left")
+            .join(broadcast(f.select(col("retired").as("rb"), col("cur").as("cb0"))),
+              col("cust_b") === col("rb"), "left")
+            .select(coalesce(col("ca0"), col("cust_a")).as("ca"),
+              coalesce(col("cb0"), col("cust_b")).as("cb"))
+            .filter(col("ca") =!= col("cb"))
+            .select(col("ca").as("src"), col("cb").as("dst")).distinct()
+        }
+        val edgesLocal: Option[Array[(Long, Long)]] = fwdLocal match {
+          case Some(fm) =>
+            val raw = pairs.select(col("cust_a"), col("cust_b"))
+              .limit(DriverCcCap + 1).collect()
+            if (raw.length > DriverCcCap) None
+            else Some(raw.map { r =>
+              (fm.getOrElse(r.getLong(0), r.getLong(0)),
+                fm.getOrElse(r.getLong(1), r.getLong(1)))
+            }.filter(e => e._1 != e._2))
+          case None =>
+            val raw = cp.limit(DriverCcCap + 1).collect()
+            if (raw.length > DriverCcCap) None
+            else Some(raw.map(r => (r.getLong(0), r.getLong(1))))
+        }
+        // Driver-side union-find over the contracted edges. Union by min
+        // root keeps labels = min member ids — the invariant that makes
+        // maintained state equal the batch recompute.
+        val mergeLocal: Option[Seq[(Long, Long)]] = edgesLocal.map { es =>
+          val parent = scala.collection.mutable.Map.empty[Long, Long]
+          def find(x: Long): Long = {
+            var r = x
+            while (parent.getOrElse(r, r) != r) r = parent(r)
+            var c = x
+            while (parent.getOrElse(c, c) != c) { val nx = parent(c); parent(c) = r; c = nx }
+            r
+          }
+          es.foreach { case (ea, eb) =>
+            val (a, b2) = (find(ea), find(eb))
+            if (a != b2) { if (a < b2) parent(b2) = a else parent(a) = b2 }
+          }
+          parent.keys.toSeq.map(n => n -> find(n))
+            .filter { case (n, c) => n != c }
+        }
+        (fwdLocal, mergeLocal) match {
+          case (_, Some(mg)) if mg.isEmpty => () // no merges: no state change
+          case (Some(fm), Some(mg)) =>
+            // Steady-state path, everything driver-resident: fold the
+            // merge through the fwd map in memory (remap existing values,
+            // append the retired labels — keeps the single-hop invariant),
+            // one tiny LocalRelation write per store, member preimage and
+            // touched buckets with zero extra jobs. Writes only v=batchId
+            // from state strictly below it, so replay rewrites the same
+            // bytes.
+            val mgMap = mg.toMap
+            val newFwdRows =
+              fm.toSeq.map { case (r, c) => (r, mgMap.getOrElse(c, c)) } ++ mg
+            newFwdRows.toDF("retired", "cur").coalesce(1)
+              .write.mode("overwrite").parquet(s"$fwdDir/v=$batchId")
+            val mergedNew = mg.map(_._2).distinct
+            val mset = mergedNew.toSet
+            val memberLab =
+              (newFwdRows.filter(p => mset(p._2)) ++ mergedNew.map(c => (c, c)))
+                .toDF("member", "cluster_id")
+            val touched = (mg.map(_._1) ++ mg.map(_._2)).distinct
+            goldenRefresh(ss, goldenDir, batchId,
+              redoneOf(b, histPrev, memberLab),
+              touched.toDF("cluster_id"),
+              touched.map(pkBucketLocal).toSet)
+          case (_, ml) =>
+            // Bulk regime (fwd or the pair graph past its cap): the same
+            // transitions as distributed frames. fwd fold reads only
+            // versions below batchId and writes v=batchId — no
+            // read-your-own-write, so replay stays byte-identical.
+            val merge = ml match {
+              case Some(mg) => mg.toDF("retired", "cur")
+              case None => Graph.connectedComponents(cp)
+                .filter(col("node") =!= col("comp_id"))
+                .select(col("node").as("retired"), col("comp_id").as("cur"))
+                .graftCheckpoint() // consumed 3× below
+            }
+            val newFwd = fwd
+              .join(merge.select(col("retired").as("mr"), col("cur").as("mc")),
+                fwd("cur") === col("mr"), "left")
+              .select(fwd("retired"), coalesce(col("mc"), fwd("cur")).as("cur"))
+              .unionByName(merge)
+            newFwd.write.mode("overwrite").parquet(s"$fwdDir/v=$batchId")
+            val fwdNow = ss.read.parquet(s"$fwdDir/v=$batchId")
+            // Members of every refreshed cluster, straight off the fwd
+            // table: preimage(cur) ∪ {cur} — no corpus scan, no map store.
+            val mergedNew = merge.select(col("cur")).distinct()
+            val memberLab = fwdNow.join(mergedNew, Seq("cur"), "left_semi")
+              .select(col("retired").as("member"), col("cur").as("cluster_id"))
+              .unionByName(mergedNew
+                .select(col("cur").as("member"), col("cur").as("cluster_id")))
+            val touched = merge.select(col("retired").as("cluster_id"))
+              .unionByName(merge.select(col("cur").as("cluster_id"))).distinct()
+            val tb = ml match {
+              case Some(mg) =>
+                (mg.map(_._1) ++ mg.map(_._2)).map(pkBucketLocal).toSet
+              case None => touched.select(pkBucket(col("cluster_id")).as("b"))
+                .distinct().collect().map(_.getInt(0)).toSet
+            }
+            goldenRefresh(ss, goldenDir, batchId,
+              redoneOf(b, histPrev, memberLab), touched, tb)
+        }
+      } finally histPrev.unpersist()
     }
   }
 

@@ -2450,12 +2450,9 @@ object ExtQueries {
     * literal frame, metric-scale rows) so the session confs are restored
     * whatever happens; StatsSpec pins catalog stats reaching the
     * optimized plan. */
-  def ddlAnalyzeStats(spark: SparkSession, dir: String): DataFrame = {
-    val cboWas = spark.conf.get("spark.sql.cbo.enabled", "false")
-    val reorderWas = spark.conf.get("spark.sql.cbo.joinReorder.enabled", "false")
-    try {
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+  def ddlAnalyzeStats(spark: SparkSession, dir: String): DataFrame =
+    withConf(spark, "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.cbo.joinReorder.enabled" -> "true") {
       spark.sql("DROP TABLE IF EXISTS graft_cbo_orders")
       spark.sql("DROP TABLE IF EXISTS graft_cbo_customer")
       tbl(spark, dir, "orders")
@@ -2477,11 +2474,7 @@ object ExtQueries {
       val rows = q.collect().toSeq
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), q.schema)
-    } finally {
-      spark.conf.set("spark.sql.cbo.enabled", cboWas)
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", reorderWas)
     }
-  }
 
   /** Parameterized SQL (Spark 4 named parameters + `IDENTIFIER()`): the
     * identifier-safe answer to the reference's `TABLE_NAME` f-string

@@ -1,7 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Path}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Helpers shared by the oracle-checked queries.
   *
@@ -12,6 +13,10 @@ import java.nio.file.{Files, Path}
   * the real file-handling machinery on it, and phrase the oracle over the
   * original table. Content is derived 1:1 from the table, so results are
   * comparable.
+  *
+  * The streaming keys share one harness from here: `stage` the input,
+  * `feed` it back as a parquet file stream, `drain` the started query,
+  * and scope any session conf the query needs with `withConf`.
   */
 object Staging {
 
@@ -39,11 +44,39 @@ object Staging {
     } else df
   }
 
-  /** Fresh temp dir under java.io.tmpdir; contents are small derivations of
-    * testdata, left for OS cleanup. */
-  def tmpDir(tag: String): String = {
-    val p: Path = Files.createTempDirectory(s"graft-$tag-")
-    p.toFile.deleteOnExit()
-    p.toString
+  /** Fresh temp dir under java.io.tmpdir, deleted with its contents when
+    * the JVM exits. */
+  def tmpDir(tag: String): String =
+    org.apache.spark.sql.GraftBridge.createTempDir(s"graft-$tag").getPath
+
+  /** Stage `df` as `n` parquet files in a fresh temp dir; returns the dir. */
+  def stage(df: DataFrame, n: Int, tag: String): String = {
+    val src = tmpDir(tag)
+    df.repartition(n).write.mode("overwrite").parquet(src)
+    src
+  }
+
+  /** Parquet file-stream source over `glob`, `n` files per micro-batch. */
+  def feed(spark: SparkSession, schema: StructType, glob: String, n: Int): DataFrame =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", n).option("pathGlobFilter", "*.parquet")
+      .parquet(glob)
+
+  /** Run a started query over everything its source holds, then stop it
+    * (also when a batch fails). */
+  def drain(q: StreamingQuery): Unit =
+    try q.processAllAvailable() finally q.stop()
+
+  /** Run `body` with the session conf `kvs` set, then restore each key: a
+    * key that was unset before is unset again, not pinned to its default. */
+  def withConf[A](spark: SparkSession, kvs: (String, String)*)(body: => A): A = {
+    val set = spark.conf.getAll
+    val prev = kvs.map { case (k, _) => k -> set.get(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }

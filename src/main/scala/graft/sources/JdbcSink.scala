@@ -1,7 +1,5 @@
 package graft.sources
 
-import graft.etl.Schemas
-
 /** JDBC append sink — the reference's real sink is Postgres/TimescaleDB
   * through a pooled SQLAlchemy engine (/root/reference/btc_etl.py:49) with
   * batched multi-row inserts (/root/reference/btc_etl.py:179-180,
@@ -20,10 +18,8 @@ import graft.etl.Schemas
   * No Postgres is reachable from the sandbox, but embedded Derby ships in
   * the Spark distribution — `CoreQueries.sinkJdbcRoundtrip` runs the
   * writer options END-TO-END against a live Derby database (write, then
-  * partitioned parallel read back, oracle-verified). The Postgres-
-  * specific DDL builders below stay unit-tested (JdbcSinkSpec); the
-  * pipeline's sink is the date-partitioned parquet lake
-  * (BtcPipeline.backfill / watch).
+  * partitioned parallel read back, oracle-verified). The pipeline's sink
+  * is the date-partitioned parquet lake (BtcPipeline.backfill / watch).
   */
 object JdbcSink {
 
@@ -51,29 +47,6 @@ object JdbcSink {
       "isolationLevel" -> o.isolationLevel) ++
       o.user.map("user" -> _) ++
       o.password.map("password" -> _)
-  }
-
-  /** The reference's sink DDL (btc_etl.py:73-82): `date_time` PRIMARY KEY
-    * plus the 7 double metrics, in sink-column order. The PK is what the
-    * cross-batch anti-join (BtcPipeline.antiJoinSinkDates) reproduces on
-    * the parquet side. */
-  def createTableDdl(table: String): String = {
-    require(table.matches("[A-Za-z_][A-Za-z0-9_]*"), s"unsafe table name: $table")
-    val metrics = Schemas.sinkCols.filterNot(_ == "date_time")
-      .map(c => s"  $c DOUBLE PRECISION")
-      .mkString(",\n")
-    s"""CREATE TABLE IF NOT EXISTS $table (
-       |  date_time TIMESTAMPTZ PRIMARY KEY,
-       |$metrics
-       |)""".stripMargin
-  }
-
-  /** TimescaleDB hypertable conversion incl. the migrate-existing-data
-    * flag (btc_etl.py:99-101); the partitioned-parquet analog is the
-    * date-partitioned layout BtcPipeline writes from the first append. */
-  def createHypertableDdl(table: String): String = {
-    require(table.matches("[A-Za-z_][A-Za-z0-9_]*"), s"unsafe table name: $table")
-    s"SELECT create_hypertable('$table', 'date_time', if_not_exists => TRUE, migrate_data => TRUE)"
   }
 
   /** Does `table` exist at `url`? Probed through `DatabaseMetaData

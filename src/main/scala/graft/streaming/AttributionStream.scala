@@ -54,28 +54,21 @@ object AttributionStream {
 
   def run(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val feed = tbl(spark, dir, "events")
+    val evs = tbl(spark, dir, "events")
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"),
         col("value").cast("decimal(18,2)").as("v"))
     val glob = StreamQueries.stageChronological(
-      spark, feed, chunks = 8, orderCols = Seq(col("ts_us"), col("event_id")),
+      spark, evs, chunks = 8, orderCols = Seq(col("ts_us"), col("event_id")),
       tag = "sattr")
 
     // transformWithState needs column families -> RocksDB provider (the
     // 100 TB configuration anyway: state off-heap per task, not in heap
     // maps); state partitions sized to the keyspace for the run
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     val out = tmpDir("sattrsink")
-    try {
-      val q = spark.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
-        .parquet(glob)
+    withConf(spark, StreamQueries.RocksDbState, StreamQueries.FewStatePartitions) {
+      drain(feed(spark, evs.schema, glob, 2)
         .as[Ev]
         .groupByKey(_.user_id)
         .transformWithState(new LastClick, TimeMode.None(), OutputMode.Append())
@@ -85,15 +78,7 @@ object AttributionStream {
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[Attr], _: Long) =>
           batch.write.mode("append").parquet(out)
         }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+        .start())
     }
 
     spark.read.parquet(out)

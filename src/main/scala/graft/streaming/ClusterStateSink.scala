@@ -1,8 +1,9 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Generic keyed merge target for streaming aggregation state — the
   * scale-safe replacement for `complete`-output-mode aggregation into a
@@ -71,9 +72,13 @@ object KeyedStateSink {
       prior.filter(_ < pv).foreach(v => fs.delete(new Path(versionDir(root, v)), true)))
   }
 
-  /** Latest merged state, if any batch committed. */
-  def read(spark: SparkSession, root: String): Option[DataFrame] =
-    versions(spark, root).maxOption.map(v => spark.read.parquet(versionDir(root, v)))
+  /** Latest merged state; an empty frame of schema `empty` if no batch
+    * committed. */
+  def read(spark: SparkSession, root: String, empty: StructType): DataFrame =
+    versions(spark, root).maxOption match {
+      case Some(v) => spark.read.parquet(versionDir(root, v))
+      case None => spark.createDataFrame(java.util.List.of[Row](), empty)
+    }
 }
 
 /** The minhash-cluster dedup instance of [[KeyedStateSink]]: batch rows are
@@ -90,8 +95,5 @@ object ClusterStateSink {
 
   /** Latest merged state: (sig, rep, n_docs). */
   def read(spark: SparkSession, root: String): DataFrame =
-    KeyedStateSink.read(spark, root).getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, Long, Long)].toDF("sig", "rep", "n_docs")
-    }
+    KeyedStateSink.read(spark, root, StructType.fromDDL("sig STRING, rep BIGINT, n_docs BIGINT"))
 }

@@ -49,42 +49,21 @@ object EwmaStream {
     import spark.implicits._
     import graft.queries.Staging._
 
-    val src = tmpDir("streamewma")
     val events = tbl(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_id"), col("value"))
-    // chronological chunks via range partitioning (no single-partition
-    // ntile window); persisted so sampled bounds are stable across writes
-    val bucketed = events
-      .repartitionByRange(2, col("us"), col("event_id"))
-      .withColumn("b", spark_partition_id() + 1)
-      .persist()
-    for (i <- 1 to 2)
-      bucketed.filter(col("b") === i).drop("b")
-        .coalesce(1).write.mode("overwrite").parquet(s"$src/b$i")
-    bucketed.unpersist()
-    val fs = new org.apache.hadoop.fs.Path(src)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val t0 = System.currentTimeMillis() - 3600000L
-    for (i <- 1 to 2) {
-      val d = new org.apache.hadoop.fs.Path(s"$src/b$i")
-      fs.listStatus(d).filter(_.getPath.getName.endsWith(".parquet"))
-        .foreach(st => fs.setTimes(st.getPath, t0 + i * 60000L, -1))
-    }
+    val glob = StreamQueries.stageChronological(
+      spark, events, chunks = 2, orderCols = Seq(col("us"), col("event_id")), tag = "streamewma")
 
-    val snaps = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
-      .parquet(s"$src/*")
+    val snaps = feed(spark, events.schema, glob, 1)
       .as[EwmaEv]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fold _)
 
     val out = tmpDir("streamewmasink")
-    val q = snaps.toDF().writeStream
+    drain(snaps.toDF().writeStream
       .format("parquet").option("path", out).outputMode("append")
       .option("checkpointLocation", tmpDir("streamewmackpt"))
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .start())
 
     val all = spark.read.parquet(out)
     // final snapshot per user = the max-n append

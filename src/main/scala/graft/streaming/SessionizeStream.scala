@@ -52,46 +52,24 @@ object SessionizeStream {
     import spark.implicits._
     import graft.queries.Staging._
 
-    val src = tmpDir("streamsess")
     val events = tbl(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_id"))
-    // stage two chronological chunks (RANGE partitioning + partition id —
-    // ordered disjoint chunks without a single-partition ntile window;
-    // persisted so the partitioner's sampled bounds can't shift between
-    // the chunk writes) and PIN ascending modification times: the file
-    // source orders new files by (modTime, path), so pickup = event-time
-    // order, which is the operator's ordered-log assumption
-    val bucketed = events
-      .repartitionByRange(2, col("us"), col("event_id"))
-      .withColumn("b", spark_partition_id() + 1)
-      .persist()
-    for (i <- 1 to 2)
-      bucketed.filter(col("b") === i).drop("b")
-        .coalesce(1).write.mode("overwrite").parquet(s"$src/b$i")
-    bucketed.unpersist()
-    val fs = new org.apache.hadoop.fs.Path(src)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val t0 = System.currentTimeMillis() - 3600000L
-    for (i <- 1 to 2) {
-      val d = new org.apache.hadoop.fs.Path(s"$src/b$i")
-      fs.listStatus(d).filter(_.getPath.getName.endsWith(".parquet"))
-        .foreach(st => fs.setTimes(st.getPath, t0 + i * 60000L, -1))
-    }
+    // two chronological chunks with pinned ascending modification times:
+    // the file source orders new files by (modTime, path), so pickup =
+    // event-time order, which is the operator's ordered-log assumption
+    val glob = StreamQueries.stageChronological(
+      spark, events, chunks = 2, orderCols = Seq(col("us"), col("event_id")), tag = "streamsess")
 
-    val sessions = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
-      .parquet(s"$src/*")
+    val sessions = feed(spark, events.schema, glob, 1)
       .as[SessEv]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(sessionize _)
 
     val out = tmpDir("streamsesssink")
-    val q = sessions.toDF().writeStream
+    drain(sessions.toDF().writeStream
       .format("parquet").option("path", out).outputMode("append")
       .option("checkpointLocation", tmpDir("streamsessckpt"))
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .start())
 
     spark.read.parquet(out)
       .select(

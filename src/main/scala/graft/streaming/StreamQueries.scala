@@ -46,12 +46,10 @@ object StreamQueries {
           .as("date_time"),
         col("event_type"), col("value"))
 
-    val q = stream.writeStream
+    drain(stream.writeStream
       .format("parquet").option("path", out).outputMode("append")
       .option("checkpointLocation", tmpDir("streamckpt"))
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .start())
     spark.read.parquet(out).orderBy("event_id")
   }
 
@@ -75,13 +73,10 @@ object StreamQueries {
     * batch slicing. The read-back census goes through the manifest
     * reader — the same snapshot contract the batch sinks verify. */
   def streamLakeMerge(spark: SparkSession, dir: String): DataFrame = {
-    val src = tmpDir("slmsrc")
     val events = tbl(spark, dir, "events")
-    events.repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(events, 4, "slmsrc")
     val out = tmpDir("slmsink")
-    val q = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, events.schema, src, 2)
       .writeStream
       .option("checkpointLocation", tmpDir("slmckpt"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -90,9 +85,7 @@ object StreamQueries {
           .select("event_id", "event_date", "event_type", "value")
         graft.etl.LakeOps.mergeInto(spark, out, upserts, "event_id", "event_date")
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .start())
     graft.etl.LakeOps.readTable(spark, out)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
@@ -138,11 +131,8 @@ object StreamQueries {
         .select((lit(1000000L) + col("vec_id")).as("vec_id"),
           transform(col("embedding"), x => abs(x.cast("double")) + lit(1.0d))
             .as("embedding")))
-    val src = tmpDir("sivfmsrc")
-    incoming.repartition(6).write.mode("overwrite").parquet(src)
-    val q = spark.readStream.schema(incoming.schema)
-      .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    val src = stage(incoming, 6, "sivfmsrc")
+    drain(feed(spark, incoming.schema, src, 2)
       .writeStream
       .option("checkpointLocation", tmpDir("sivfmckpt"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -156,9 +146,7 @@ object StreamQueries {
           iterations = 1, sampleMod = 2L)
         ()
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .start())
     spark.read.parquet(s"${Similarity.ivfLiveRoot(spark, idx)}/vectors")
       .groupBy("vec_id").agg(count(lit(1)).as("n"))
       .orderBy("vec_id")
@@ -173,13 +161,10 @@ object StreamQueries {
     * logic: cross-batch merge ≡ one-shot histogram, bit for bit. */
   def streamQuantile(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Sketches
-    val src = tmpDir("squantsrc")
     val events = tbl(spark, dir, "events")
-    events.repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(events, 4, "squantsrc")
     val stateRoot = tmpDir("squantstate")
-    val q = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, events.schema, src, 2)
       .writeStream
       .option("checkpointLocation", tmpDir("squantckpt"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -188,13 +173,9 @@ object StreamQueries {
         KeyedStateSink.merge(stateRoot, Seq("event_type", "b"),
           minCols = Nil, sumCols = Seq("c"))(partial, batchId)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val state = KeyedStateSink.read(spark, stateRoot).getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, Long, Long)].toDF("event_type", "b", "c")
-    }
+      .start())
+    val state = KeyedStateSink.read(spark, stateRoot,
+      StructType.fromDDL("event_type STRING, b BIGINT, c BIGINT"))
     Sketches.quantilesFromHist(state, "event_type", 5.0, Seq(50, 90, 99))
       .orderBy("event_type", "pct")
   }
@@ -210,13 +191,10 @@ object StreamQueries {
     * ≤64 rows per type at any corpus size — the property that makes
     * HLL the streaming cardinality sketch. */
   def streamHll(spark: SparkSession, dir: String): DataFrame = {
-    val src = tmpDir("shllsrc")
     val events = tbl(spark, dir, "events")
-    events.repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(events, 4, "shllsrc")
     val stateRoot = tmpDir("shllstate")
-    val q = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, events.schema, src, 2)
       .writeStream
       .option("checkpointLocation", tmpDir("shllckpt"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -234,13 +212,9 @@ object StreamQueries {
         KeyedStateSink.merge(stateRoot, Seq("event_type", "bucket"),
           minCols = Seq("m_neg"), sumCols = Nil)(partial, batchId)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val state = KeyedStateSink.read(spark, stateRoot).getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, Long, Long)].toDF("event_type", "bucket", "m_neg")
-    }
+      .start())
+    val state = KeyedStateSink.read(spark, stateRoot,
+      StructType.fromDDL("event_type STRING, bucket BIGINT, m_neg BIGINT"))
     state
       .withColumn("m", -col("m_neg"))
       .groupBy("event_type")
@@ -261,13 +235,10 @@ object StreamQueries {
     * never a second data scan. Per-trigger cost = batch delta + one
     * keyed merge; no complete-mode driver-side state. */
   def streamSeasonal(spark: SparkSession, dir: String): DataFrame = {
-    val src = tmpDir("sseasrc")
     val events = tbl(spark, dir, "events")
-    events.repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(events, 4, "sseasrc")
     val stateRoot = tmpDir("sseastate")
-    val q = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, events.schema, src, 2)
       .writeStream
       .option("checkpointLocation", tmpDir("sseackpt"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -278,13 +249,9 @@ object StreamQueries {
         KeyedStateSink.merge(stateRoot, Seq("event_type", "hod"),
           minCols = Nil, sumCols = Seq("n", "sum_cents"))(partial, batchId)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val state = KeyedStateSink.read(spark, stateRoot).getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, Long, Long, Long)].toDF("event_type", "hod", "n", "sum_cents")
-    }
+      .start())
+    val state = KeyedStateSink.read(spark, stateRoot,
+      StructType.fromDDL("event_type STRING, hod BIGINT, n BIGINT, sum_cents BIGINT"))
     val totals = state.groupBy("event_type")
       .agg(sum("n").as("nn"), sum("sum_cents").as("s"))
     state.join(broadcast(totals), Seq("event_type"))
@@ -304,7 +271,6 @@ object StreamQueries {
     * A bucket seen in only one half joins as zero, exactly as the batch
     * group-over-everything produces. */
   def streamDrift(spark: SparkSession, dir: String): DataFrame = {
-    val src = tmpDir("sdriftsrc")
     val events = tbl(spark, dir, "events")
     // split point: exact integer µs midpoint (driver scalar — metadata,
     // needed to stage the "future" files; the reference frame is in-plan)
@@ -315,12 +281,9 @@ object StreamQueries {
       least(floor(col("value") / 10d).cast("long"), lit(9L)))
     val refHist = bucketed(events.filter(unix_micros(col("ts")) * 2 < lo + hi))
       .groupBy("event_type", "bucket").agg(count(lit(1)).as("n_a"))
-    events.filter(unix_micros(col("ts")) * 2 >= lo + hi)
-      .repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(events.filter(unix_micros(col("ts")) * 2 >= lo + hi), 4, "sdriftsrc")
     val stateRoot = tmpDir("sdriftstate")
-    val q = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, events.schema, src, 2)
       .writeStream
       .option("checkpointLocation", tmpDir("sdriftckpt"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -329,13 +292,9 @@ object StreamQueries {
         KeyedStateSink.merge(stateRoot, Seq("event_type", "bucket"),
           minCols = Nil, sumCols = Seq("n_b"))(partial, batchId)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = KeyedStateSink.read(spark, stateRoot).getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, Long, Long)].toDF("event_type", "bucket", "n_b")
-    }
+      .start())
+    val streamed = KeyedStateSink.read(spark, stateRoot,
+      StructType.fromDDL("event_type STRING, bucket BIGINT, n_b BIGINT"))
     val joined = refHist.join(streamed, Seq("event_type", "bucket"), "full_outer")
       .select(col("event_type"), col("bucket"),
         coalesce(col("n_a"), lit(0L)).as("n_a"),
@@ -361,13 +320,10 @@ object StreamQueries {
     * per-batch work is one partial-aggregatable count over the batch,
     * state is group-cardinality, the matrix itself never touches data. */
   def streamChi2(spark: SparkSession, dir: String): DataFrame = {
-    val src = tmpDir("schi2src")
     val orders = tbl(spark, dir, "orders")
-    orders.repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(orders, 4, "schi2src")
     val stateRoot = tmpDir("schi2state")
-    val q = spark.readStream.schema(orders.schema)
-      .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, orders.schema, src, 2)
       .writeStream
       .option("checkpointLocation", tmpDir("schi2ckpt"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -379,13 +335,9 @@ object StreamQueries {
         KeyedStateSink.merge(stateRoot, Seq("c1", "c2", "c3"),
           minCols = Nil, sumCols = Seq("cnt"))(partial, batchId)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val cube = KeyedStateSink.read(spark, stateRoot).getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, String, String, Long)].toDF("c1", "c2", "c3", "cnt")
-    }
+      .start())
+    val cube = KeyedStateSink.read(spark, stateRoot,
+      StructType.fromDDL("c1 STRING, c2 STRING, c3 STRING, cnt BIGINT"))
     graft.queries.ExtQueries.chi2FromCube(cube)
   }
 
@@ -397,13 +349,10 @@ object StreamQueries {
     * batch + one dim·(dim+3)/2-key merge; the state never grows with the
     * corpus — incremental PCA over an append-only embedding store. */
   def streamPca(spark: SparkSession, dir: String): DataFrame = {
-    val src = tmpDir("spcasrc")
     val emb = tbl(spark, dir, "embeddings")
-    emb.repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(emb, 4, "spcasrc")
     val stateRoot = tmpDir("spcastate")
-    val q = spark.readStream.schema(emb.schema)
-      .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, emb.schema, src, 2)
       .writeStream
       .option("checkpointLocation", tmpDir("spcackpt"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -413,11 +362,9 @@ object StreamQueries {
         KeyedStateSink.merge(stateRoot, Seq("i", "j"),
           minCols = Nil, sumCols = Seq("s", "n"))(partial, batchId)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val stats = KeyedStateSink.read(spark, stateRoot)
-      .getOrElse(graft.operators.Embeddings.gramStatsOf(emb.limit(0), 64))
+      .start())
+    val stats = KeyedStateSink.read(spark, stateRoot,
+      StructType.fromDDL("i INT, j INT, s DECIMAL(38,0), n BIGINT"))
     graft.operators.Embeddings.pcaLoadingsFromStats(stats, iters = 8, dim = 64)
       .orderBy("dim")
   }
@@ -431,13 +378,10 @@ object StreamQueries {
     * (one row per series-hour), and the quadratic pair stage never runs
     * inside a trigger. */
   def streamTheilsen(spark: SparkSession, dir: String): DataFrame = {
-    val src = tmpDir("stheilsrc")
     val events = tbl(spark, dir, "events")
-    events.repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(events, 4, "stheilsrc")
     val stateRoot = tmpDir("stheilstate")
-    val q = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, events.schema, src, 2)
       .writeStream
       .option("checkpointLocation", tmpDir("stheilckpt"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -448,14 +392,9 @@ object StreamQueries {
         KeyedStateSink.merge(stateRoot, Seq("event_type", "hr"),
           minCols = Nil, sumCols = Seq("s_cents", "n"))(partial, batchId)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val cube = KeyedStateSink.read(spark, stateRoot).getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, java.sql.Timestamp, Long, Long)]
-        .toDF("event_type", "hr", "s_cents", "n")
-    }
+      .start())
+    val cube = KeyedStateSink.read(spark, stateRoot,
+      StructType.fromDDL("event_type STRING, hr TIMESTAMP, s_cents BIGINT, n BIGINT"))
     graft.operators.TimeSeries.theilSenFromHourly(
       cube.select(col("event_type"), col("hr"),
         expr("s_cents div n").as("qv")))
@@ -473,13 +412,10 @@ object StreamQueries {
     * at 100 TB: each crawl increment updates ≤1024 counters; scoring
     * never waits for a retrain job. */
   def streamQualityNb(spark: SparkSession, dir: String): DataFrame = {
-    val src = tmpDir("snbsrc")
     val docs = tbl(spark, dir, "documents")
-    docs.repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(docs, 4, "snbsrc")
     val stateRoot = tmpDir("snbstate")
-    val q = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, docs.schema, src, 2)
       .writeStream
       .option("checkpointLocation", tmpDir("snbckpt"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -498,13 +434,9 @@ object StreamQueries {
         KeyedStateSink.merge(stateRoot, Seq("bucket"),
           minCols = Nil, sumCols = Seq("c_pos", "c_neg"))(partial, batchId)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val counts = KeyedStateSink.read(spark, stateRoot).getOrElse {
-      import spark.implicits._
-      Seq.empty[(Long, Long, Long)].toDF("bucket", "c_pos", "c_neg")
-    }
+      .start())
+    val counts = KeyedStateSink.read(spark, stateRoot,
+      StructType.fromDDL("bucket BIGINT, c_pos BIGINT, c_neg BIGINT"))
     val model = counts.select(col("bucket"),
       expr("((c_pos + 1) * 1000000) div (c_pos + c_neg + 2)").as("w_ppm"))
     graft.operators.TextOps.nbQualityScores(docs, model).orderBy("doc_id")
@@ -522,9 +454,8 @@ object StreamQueries {
     * (benchmarks are small), each crawl increment pays one scan of
     * itself, and no batch ever re-reads history. */
   def streamContamination(spark: SparkSession, dir: String): DataFrame = {
-    val src = tmpDir("sconsrc")
     val docs = tbl(spark, dir, "documents")
-    docs.repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(docs, 4, "sconsrc")
     graft.expressions.GraftFunctions.register(spark)
     def gramsOf(d: DataFrame) = d
       .select(col("doc_id"), graft.functions.CrossFns.tokens(col("text")).as("w"))
@@ -533,9 +464,7 @@ object StreamQueries {
     val evalGrams = gramsOf(docs.filter(col("doc_id") % 10 === 7))
       .select("sh").distinct().graftCheckpoint()
     val stateRoot = tmpDir("sconstate")
-    val q = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, docs.schema, src, 2)
       .writeStream
       .option("checkpointLocation", tmpDir("sconckpt"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -550,13 +479,9 @@ object StreamQueries {
         KeyedStateSink.merge(stateRoot, Seq("source"),
           minCols = Nil, sumCols = Seq("n_train", "n_contaminated"))(partial, batchId)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val census = KeyedStateSink.read(spark, stateRoot).getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, Long, Long)].toDF("source", "n_train", "n_contaminated")
-    }
+      .start())
+    val census = KeyedStateSink.read(spark, stateRoot,
+      StructType.fromDDL("source STRING, n_train BIGINT, n_contaminated BIGINT"))
     census.select(col("source"), col("n_train"), col("n_contaminated"),
         expr("(n_contaminated * 1000000) div n_train").as("contam_ppm"))
       .orderBy("source")
@@ -570,13 +495,10 @@ object StreamQueries {
     * drift monitor: re-reading the pair matrix per batch costs
     * |types|² tiny rows, never data. */
   def streamDtw(spark: SparkSession, dir: String): DataFrame = {
-    val src = tmpDir("sdtwsrc")
     val events = tbl(spark, dir, "events")
-    events.repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(events, 4, "sdtwsrc")
     val stateRoot = tmpDir("sdtwstate")
-    val q = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, events.schema, src, 2)
       .writeStream
       .option("checkpointLocation", tmpDir("sdtwckpt"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -587,14 +509,9 @@ object StreamQueries {
         KeyedStateSink.merge(stateRoot, Seq("event_type", "hod"),
           minCols = Nil, sumCols = Seq("s_cents", "n"))(partial, batchId)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val cube = KeyedStateSink.read(spark, stateRoot).getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, Long, Long, Long)]
-        .toDF("event_type", "hod", "s_cents", "n")
-    }
+      .start())
+    val cube = KeyedStateSink.read(spark, stateRoot,
+      StructType.fromDDL("event_type STRING, hod BIGINT, s_cents BIGINT, n BIGINT"))
     graft.operators.TimeSeries.dtwFromHodProfiles(
       cube.select(col("event_type"), col("hod"),
         expr("s_cents div n").as("qv")), band = 24)
@@ -602,14 +519,11 @@ object StreamQueries {
   }
 
   def streamWindowAgg(spark: SparkSession, dir: String): DataFrame = {
-    val src = tmpDir("streamwin")
     val events = tbl(spark, dir, "events")
-    events.repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(events, 4, "streamwin")
     val stateRoot = tmpDir("streamwinstate")
 
-    val q = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, events.schema, src, 2)
       .writeStream
       .option("checkpointLocation", tmpDir("streamwinckpt"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -623,14 +537,10 @@ object StreamQueries {
         KeyedStateSink.merge(stateRoot, Seq("win_start", "event_type"),
           minCols = Nil, sumCols = Seq("n", "sum_dec"))(partial, batchId)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .start())
 
-    KeyedStateSink.read(spark, stateRoot)
-      .getOrElse { import spark.implicits._
-        Seq.empty[(String, String, Long, java.math.BigDecimal)]
-          .toDF("win_start", "event_type", "n", "sum_dec") }
+    KeyedStateSink.read(spark, stateRoot,
+      StructType.fromDDL("win_start STRING, event_type STRING, n BIGINT, sum_dec DECIMAL(38,2)"))
       .select(col("win_start"), col("event_type"), col("n"),
         col("sum_dec").cast("double").as("sum_value"))
       .orderBy("win_start", "event_type")
@@ -642,16 +552,13 @@ object StreamQueries {
     * without shuffling the stream. Same partial-agg + keyed-merge shape as
     * [[streamWindowAgg]]: no complete mode, no driver-side state. */
   def streamStaticJoin(spark: SparkSession, dir: String): DataFrame = {
-    val src = tmpDir("streamjoin")
     val events = tbl(spark, dir, "events")
-    events.repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(events, 4, "streamjoin")
     val dim = events.groupBy("user_id")
       .agg(count(lit(1)).as("n_user_events"))
     val stateRoot = tmpDir("streamjoinstate")
 
-    val q = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, events.schema, src, 2)
       .writeStream
       .option("checkpointLocation", tmpDir("streamjoinckpt"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -665,14 +572,10 @@ object StreamQueries {
         KeyedStateSink.merge(stateRoot, Seq("event_type"),
           minCols = Nil, sumCols = Seq("n", "sum_dec", "sum_dim"))(partial, batchId)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .start())
 
-    KeyedStateSink.read(spark, stateRoot)
-      .getOrElse { import spark.implicits._
-        Seq.empty[(String, Long, java.math.BigDecimal, Long)]
-          .toDF("event_type", "n", "sum_dec", "sum_dim") }
+    KeyedStateSink.read(spark, stateRoot,
+      StructType.fromDDL("event_type STRING, n BIGINT, sum_dec DECIMAL(38,2), sum_dim BIGINT"))
       .select(col("event_type"), col("n"),
         col("sum_dec").cast("double").as("sum_value"), col("sum_dim"))
       .orderBy("event_type")
@@ -695,10 +598,7 @@ object StreamQueries {
       stateRoot: String,
       maxFilesPerTrigger: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.functions.CrossFns._
-    val sigs = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    val sigs = feed(spark, schema, src, maxFilesPerTrigger)
       .select(col("doc_id"), shingleHashes(col("text"), 3).as("hs"))
       .filter(size(col("hs")) > 0)
       .select(col("doc_id"),
@@ -717,15 +617,12 @@ object StreamQueries {
     * is split across several real micro-batches; the drained state must
     * (and does — same oracle) equal the batch groupBy. */
   def streamDedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val src = tmpDir("streamdedup")
     val docs = tbl(spark, dir, "documents")
-    docs.repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(docs, 4, "streamdedup")
     val stateRoot = tmpDir("streamdedupstate")
 
-    val q = startDedupClusterQuery(
-      spark, src, docs.schema, tmpDir("streamdedupckpt"), stateRoot)
-    q.processAllAvailable()
-    q.stop()
+    drain(startDedupClusterQuery(
+      spark, src, docs.schema, tmpDir("streamdedupckpt"), stateRoot))
     ClusterStateSink.read(spark, stateRoot).select("rep", "n_docs").orderBy("rep")
   }
 
@@ -764,18 +661,18 @@ object StreamQueries {
     s"$src/*"
   }
 
-  /** Run `body` with a reduced shuffle-partition count, restoring the old
-    * value after. Stateful streaming cost is dominated by per-partition
+  /** Conf for a stateful stream's lifetime: a reduced shuffle-partition
+    * count. Stateful streaming cost is dominated by per-partition
     * state-store checkpoint files (partitions × state stores × batches), so
     * a small staged stream wants few, fat state partitions; on a real
     * cluster this is the `spark.sql.shuffle.partitions` the job submits
     * with. Result values are partitioning-independent. */
-  private def withShufflePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, old)
-  }
+  private[streaming] val FewStatePartitions = "spark.sql.shuffle.partitions" -> "8"
+
+  /** Conf for a `transformWithState` stream: it needs column families, so
+    * the RocksDB state-store provider (state off-heap per task). */
+  private[streaming] val RocksDbState = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Watermarked APPEND-mode windowed aggregation — Spark's own stateful
     * streaming aggregation (vs the foreachBatch keyed-merge form of
@@ -798,10 +695,8 @@ object StreamQueries {
       Seq(col("ts")), "streamwinapp")
 
     val out = tmpDir("streamwinappsink")
-    withShufflePartitions(spark, 8) {
-      val q = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
-        .parquet(glob)
+    withConf(spark, FewStatePartitions) {
+      drain(feed(spark, events.schema, glob, 1)
         .withWatermark("ts", "0 seconds")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(
@@ -810,9 +705,7 @@ object StreamQueries {
         .writeStream
         .format("parquet").option("path", out).outputMode("append")
         .option("checkpointLocation", tmpDir("streamwinappckpt"))
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        .start())
     }
 
     spark.read.parquet(out)
@@ -841,10 +734,8 @@ object StreamQueries {
     val glob = stageChronological(spark, purchases, 3, Seq(col("ts"), col("event_id")), "strasof")
 
     val out = tmpDir("strasofsink")
-    withShufflePartitions(spark, 8) {
-      val q = spark.readStream.schema(purchases.schema)
-        .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
-        .parquet(glob)
+    withConf(spark, FewStatePartitions) {
+      drain(feed(spark, purchases.schema, glob, 1)
         .writeStream
         .option("checkpointLocation", tmpDir("strasofckpt"))
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -852,9 +743,7 @@ object StreamQueries {
             .asOfNative(batch, clicks, "user_id", "ts", "event_id", Seq("value"))
             .write.mode("append").parquet(out)
         }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        .start())
     }
 
     spark.read.parquet(out)
@@ -884,10 +773,8 @@ object StreamQueries {
     val glob = stageChronological(spark, events, 4, Seq(col("event_id")), "strhh")
     val sketchDir = java.nio.file.Paths.get(tmpDir("strhhsketches"))
 
-    withShufflePartitions(spark, 8) {
-      val q = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
-        .parquet(glob)
+    withConf(spark, FewStatePartitions) {
+      drain(feed(spark, events.schema, glob, 1)
         .writeStream
         .option("checkpointLocation", tmpDir("strhhckpt"))
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
@@ -898,9 +785,7 @@ object StreamQueries {
           java.nio.file.Files.write(sketchDir.resolve(f"batch-$id%05d.cms"), sketch)
           ()
         }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        .start())
     }
 
     import scala.jdk.CollectionConverters._
@@ -942,10 +827,8 @@ object StreamQueries {
     // no seed needed: mergeInto bootstraps a missing table on first merge
     val sink = tmpDir("strupsertsink") + "/table"
 
-    withShufflePartitions(spark, 8) {
-      val q = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
-        .parquet(glob)
+    withConf(spark, FewStatePartitions) {
+      drain(feed(spark, events.schema, glob, 1)
         .writeStream
         .option("checkpointLocation", tmpDir("strupsertckpt"))
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -958,9 +841,7 @@ object StreamQueries {
             .withColumn("part", col("user_id") % 8)
           graft.etl.LakeOps.mergeInto(batch.sparkSession, sink, latest, "user_id", "part")
         }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        .start())
     }
 
     spark.read.parquet(sink)
@@ -993,19 +874,15 @@ object StreamQueries {
       Seq(col("ts"), col("user_id")), "sesswin")
 
     val out = tmpDir("sesswinsink")
-    withShufflePartitions(spark, 8) {
-      val q = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
-        .parquet(glob)
+    withConf(spark, FewStatePartitions) {
+      drain(feed(spark, events.schema, glob, 1)
         .withWatermark("ts", "0 seconds")
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
         .writeStream
         .format("parquet").option("path", out).outputMode("append")
         .option("checkpointLocation", tmpDir("sesswinckpt"))
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        .start())
     }
 
     spark.read.parquet(out)
@@ -1030,9 +907,7 @@ object StreamQueries {
       spark, events.filter(col("event_type") === tpe).drop("event_type"), 2,
       Seq(col("ts"), col("event_id")), tag)
     val schema = events.drop("event_type").schema
-    def read(glob: String) = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
-      .parquet(glob)
+    def read(glob: String) = feed(spark, schema, glob, 1)
 
     val clicks = read(side("click", "ssjclick"))
       .select(col("event_id").as("click_id"), col("ts").as("click_ts"), col("user_id"))
@@ -1048,13 +923,11 @@ object StreamQueries {
         col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"))
 
     val out = tmpDir("ssjsink")
-    withShufflePartitions(spark, 8) {
-      val q = joined.writeStream
+    withConf(spark, FewStatePartitions) {
+      drain(joined.writeStream
         .format("parquet").option("path", out).outputMode("append")
         .option("checkpointLocation", tmpDir("ssjckpt"))
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        .start())
     }
 
     spark.read.parquet(out)
@@ -1082,18 +955,14 @@ object StreamQueries {
       Seq(col("ts"), col("event_id")), "dropdup")
 
     val out = tmpDir("dropdupsink")
-    withShufflePartitions(spark, 8) {
-      val q = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
-        .parquet(glob)
+    withConf(spark, FewStatePartitions) {
+      drain(feed(spark, events.schema, glob, 1)
         .withWatermark("ts", "30 minutes")
         .dropDuplicatesWithinWatermark("event_id")
         .writeStream
         .format("parquet").option("path", out).outputMode("append")
         .option("checkpointLocation", tmpDir("dropdupckpt"))
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        .start())
     }
 
     spark.read.parquet(out)
@@ -1115,13 +984,10 @@ object StreamQueries {
     * ingest gate: unbounded input, bounded per-trigger work, zero
     * driver-side state. */
   def streamQualityGate(spark: SparkSession, dir: String): DataFrame = {
-    val src = tmpDir("sqgsrc")
     val docs = tbl(spark, dir, "documents")
-    docs.repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(docs, 4, "sqgsrc")
     val out = tmpDir("sqgout")
-    val q = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, docs.schema, src, 1)
       .writeStream
       .option("checkpointLocation", tmpDir("sqgckpt"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1131,9 +997,7 @@ object StreamQueries {
           .select("doc_id", "source", "lang", "n_chars")
           .write.mode("append").parquet(out)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .start())
     spark.read.parquet(out)
       .groupBy("source", "lang")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
@@ -1149,22 +1013,17 @@ object StreamQueries {
     * .cdcChunkStats]] and shares its oracle. The production shape for
     * "dedup a crawl as it lands" storage accounting. */
   def streamCdcChunks(spark: SparkSession, dir: String): DataFrame = {
-    val src = tmpDir("scdcsrc")
     val docs = tbl(spark, dir, "documents")
-    docs.repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(docs, 4, "scdcsrc")
     val out = tmpDir("scdcout")
-    val q = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, docs.schema, src, 1)
       .writeStream
       .option("checkpointLocation", tmpDir("scdcckpt"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.operators.Dedup.cdcChunkHashes(batch)
           .write.mode("append").parquet(out)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .start())
     graft.operators.Dedup.cdcCensus(spark.read.parquet(out)).orderBy("source")
   }
 
@@ -1179,13 +1038,10 @@ object StreamQueries {
     * with per-batch cost O(batch×block), never a history re-pair. */
   def streamLinkPairs(spark: SparkSession, dir: String): DataFrame = {
     val cust = tbl(spark, dir, "customer")
-    val src = tmpDir("slpsrc")
-    cust.repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(cust, 4, "slpsrc")
     val out = tmpDir("slpout")
     val hist = tmpDir("slphist")
-    val q = spark.readStream.schema(cust.schema)
-      .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, cust.schema, src, 1)
       .writeStream
       .option("checkpointLocation", tmpDir("slpckpt"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1215,9 +1071,7 @@ object StreamQueries {
           .write.mode("append").parquet(out)
         b.write.mode("append").parquet(hist)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .start())
     spark.read.parquet(out).orderBy("cust_a", "cust_b")
   }
 
@@ -1246,22 +1100,17 @@ object StreamQueries {
     * empty merge skips the fwd/golden writes. */
   def streamLinkGolden(spark: SparkSession, dir: String): DataFrame = {
     val cust = tbl(spark, dir, "customer")
-    val src = tmpDir("slgsrc")
-    cust.repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(cust, 4, "slgsrc")
     val hist = tmpDir("slghist")
     val fwd = tmpDir("slgfwd")
     val golden = tmpDir("slggold")
-    val q = spark.readStream.schema(cust.schema)
-      .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, cust.schema, src, 1)
       .writeStream
       .option("checkpointLocation", tmpDir("slgckpt"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.etl.ErLedger.foldBatch(batch, batchId, hist, fwd, golden)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .start())
     graft.etl.ErLedger.readGolden(spark, golden)
       .select(col("cluster_id"), col("golden_name"),
         col("n_members").cast("long").as("n_members"), col("max_bal"))
@@ -1276,8 +1125,7 @@ object StreamQueries {
     * The streaming face of [[graft.queries.ExtQueries.ddlIncrementalMv]]. */
   def streamIncrementalMv(spark: SparkSession, dir: String): DataFrame = {
     val orders = tbl(spark, dir, "orders")
-    val src = tmpDir("simvsrc")
-    orders.repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(orders, 4, "simvsrc")
     val mvPath = tmpDir("simvmv")
     def agg(df: DataFrame) = df
       .select(date_format(col("o_orderdate"), "yyyy-MM").as("month"),
@@ -1285,9 +1133,7 @@ object StreamQueries {
         expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)").as("cents"))
       .groupBy("month", "priority")
       .agg(count(lit(1)).as("n_orders"), sum("cents").as("rev_cents"))
-    val q = spark.readStream.schema(orders.schema)
-      .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, orders.schema, src, 1)
       .writeStream
       .option("checkpointLocation", tmpDir("simvckpt"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1306,9 +1152,7 @@ object StreamQueries {
         val out = merged.graftCheckpoint()
         out.write.mode("overwrite").parquet(mvPath)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .start())
     spark.read.parquet(mvPath)
       .select(col("month"), col("priority"),
         col("n_orders").cast("long").as("n_orders"), col("rev_cents"))
@@ -1324,16 +1168,13 @@ object StreamQueries {
     * .aggSkyline]] and shares its oracle. */
   def streamSkyline(spark: SparkSession, dir: String): DataFrame = {
     val orders = tbl(spark, dir, "orders")
-    val src = tmpDir("sskysrc")
-    orders.repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(orders, 4, "sskysrc")
     val front = tmpDir("sskyfront")
     // the distributed bucketed-prefix-min skyline (no single-partition
     // window) — same operator as the batch face, run on frontier ∪ batch
     def skyline(df: DataFrame): DataFrame =
       graft.operators.Skyline.paretoMin(df).select("okey", "cents", "days")
-    val q = spark.readStream.schema(orders.schema)
-      .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, orders.schema, src, 1)
       .writeStream
       .option("checkpointLocation", tmpDir("sskyckpt"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1347,9 +1188,7 @@ object StreamQueries {
         val merged = skyline(prev.unionByName(pts)).graftCheckpoint()
         merged.write.mode("overwrite").parquet(front)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .start())
     spark.read.parquet(front).orderBy("cents", "days", "okey")
   }
 
@@ -1360,16 +1199,13 @@ object StreamQueries {
     * independent of every other probe, so per-batch joins union to the
     * batch answer exactly (same oracle); no cross-batch state. */
   def streamTemporalJoin(spark: SparkSession, dir: String): DataFrame = {
-    val src = tmpDir("stjsrc")
     val events = tbl(spark, dir, "events")
-    events.repartition(4).write.mode("overwrite").parquet(src)
+    val src = stage(events, 4, "stjsrc")
     val dim = graft.queries.ExtQueries.scd2Intervals(spark, dir)
       .select(col("user_id").as("d_user"), col("version"), col("state"),
         col("valid_from"), col("valid_to"))
     val out = tmpDir("stjout")
-    val q = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, events.schema, src, 1)
       .writeStream
       .option("checkpointLocation", tmpDir("stjckpt"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1384,9 +1220,7 @@ object StreamQueries {
             date_format(col("pts"), "yyyy-MM-dd HH:mm:ss").as("pts_s"))
           .write.mode("append").parquet(out)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .start())
     spark.read.parquet(out).orderBy("event_id")
   }
 
@@ -1402,9 +1236,7 @@ object StreamQueries {
     val shaped = tbl(spark, dir, "events").select("event_id", "event_type", "value")
     shaped.repartition(8, col("event_id")).write.mode("overwrite").parquet(src)
     val out = tmpDir("avnout")
-    val q = spark.readStream.schema(shaped.schema)
-      .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    val q = feed(spark, shaped.schema, src, 2)
       .writeStream.format("parquet").option("path", out)
       .option("checkpointLocation", tmpDir("avnckpt"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1431,9 +1263,7 @@ object StreamQueries {
     val url = s"jdbc:derby:${tmpDir("sjdbcdb")}/streamdb;create=true"
     val opts = graft.sources.JdbcSink.writerOptions(
       graft.sources.JdbcSink.JdbcOptions(url, "GRAFT_STREAM_SINK", numPartitions = 2))
-    val q = spark.readStream.schema(shaped.schema)
-      .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
-      .parquet(src)
+    drain(feed(spark, shaped.schema, src, 1)
       .writeStream
       .option("checkpointLocation", tmpDir("sjdbcckpt"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1460,9 +1290,7 @@ object StreamQueries {
           .write.format("jdbc").options(opts).mode("append").save()
         }
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .start())
     spark.read.format("jdbc")
       .option("url", url).option("dbtable", "GRAFT_STREAM_SINK")
       .load().orderBy("event_id")

@@ -2,9 +2,10 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The one `private[sql]` doorway the library needs: turning a custom
-  * [[LogicalPlan]] node (graft.plans.AsOfJoinPlan) into a DataFrame and
-  * reading a DataFrame's analyzed plan back out. Everything else in the
+/** The one `private[sql]`/`private[spark]` doorway the library needs:
+  * turning a custom [[LogicalPlan]] node (graft.plans.AsOfJoinPlan) into a
+  * DataFrame, reading a DataFrame's analyzed plan back out, and temp dirs
+  * that Spark cleans up at shutdown. Everything else in the
   * repo sticks to the public DataFrame/Catalyst extension APIs; this file
   * lives in the Spark package purely for access, it contains no logic. */
 object GraftBridge {
@@ -35,4 +36,9 @@ object GraftBridge {
     * pass. */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
+
+  /** A fresh `<prefix>-<uuid>` directory under java.io.tmpdir that Spark
+    * deletes recursively at JVM shutdown (`Utils` is `private[spark]`). */
+  def createTempDir(prefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix)
 }

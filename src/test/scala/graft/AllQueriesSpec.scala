@@ -3,11 +3,14 @@ package graft
 /** Executes every catalog query at sf0.001 — regression net for future
   * rounds: any query that stops executing (analysis error, runtime
   * failure) fails `sbt test` without needing the Verify harness. Value
-  * correctness stays the oracle's job (tools/compare.py / driver t2). */
+  * correctness stays the oracle's job (tools/compare.py / driver t2).
+  * Each key must also leave the shared session as it found it: no active
+  * streaming query and the same explicitly-set conf. */
 class AllQueriesSpec extends SparkSpec {
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name executes at sf0.001") {
+      val confBefore = spark.conf.getAll
       val df = fn(spark, sf)
       assert(df.columns.nonEmpty)
       assert(df.count() >= 0)
@@ -15,6 +18,10 @@ class AllQueriesSpec extends SparkSpec {
       // (jaccard/simhash) — without this a whole-catalog session
       // accumulates cached blocks for its lifetime
       spark.catalog.clearCache()
+      // a key leaves no query running and no session conf changed: a key
+      // that was unset before it ran is unset again
+      assert(spark.streams.active.isEmpty, "streaming query left running")
+      assert(spark.conf.getAll === confBefore, "session conf changed")
     }
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.streaming.KeyedStateSink
 import java.nio.file.Files
 
@@ -22,7 +23,7 @@ class KeyedStateSpec extends SparkSpec {
     // crash replay of batch 1: re-merges against version 0 and OVERWRITES
     // its own version — must not double-count
     KeyedStateSink.merge(root, Seq("k"), Nil, Seq("n", "sum_dec"))(partial(b1), 1L)
-    val got = KeyedStateSink.read(spark, root).get.orderBy("k")
+    val got = KeyedStateSink.read(spark, root, partial(Nil).schema).orderBy("k")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDecimal(2).toPlainString)).toSeq
     assert(got === Seq(("a", 5L, "15.75"), ("b", 1L, "0.75"), ("c", 1L, "1.00")))
   }
@@ -46,7 +47,7 @@ class KeyedStateSpec extends SparkSpec {
           .select(col("i"), col("j"), col("s").cast("decimal(38,0)").as("s"), col("n"))
         KeyedStateSink.merge(root, Seq("i", "j"), Nil, Seq("s", "n"))(part, b.toLong)
       }
-      KeyedStateSink.read(spark, root).get
+      KeyedStateSink.read(spark, root, StructType.fromDDL("i INT, j INT, s DECIMAL(38,0), n BIGINT"))
     }
     val even = statsVia((0 until 36).grouped(12).toSeq,
       Files.createTempDirectory("graft-kss-pca-a-").toString)
@@ -87,7 +88,7 @@ class KeyedStateSpec extends SparkSpec {
             sum(when(col("passes"), 0L).otherwise(1L)).as("c_neg"))
         KeyedStateSink.merge(root, Seq("bucket"), Nil, Seq("c_pos", "c_neg"))(part, b.toLong)
       }
-      KeyedStateSink.read(spark, root).get
+      KeyedStateSink.read(spark, root, StructType.fromDDL("bucket BIGINT, c_pos BIGINT, c_neg BIGINT"))
         .select(col("bucket"),
           expr("((c_pos + 1) * 1000000) div (c_pos + c_neg + 2)").as("w_ppm"))
     }
@@ -110,9 +111,18 @@ class KeyedStateSpec extends SparkSpec {
       p(Seq(("s1", 7L, 2L), ("s2", 9L, 1L))), 0L)
     KeyedStateSink.merge(root, Seq("sig"), Seq("rep"), Seq("n_docs"))(
       p(Seq(("s1", 3L, 4L))), 1L)
-    val st = KeyedStateSink.read(spark, root).get
+    val st = KeyedStateSink.read(spark, root, p(Nil).schema)
     assert(st.schema.fieldNames.toSeq === Seq("sig", "rep", "n_docs"))
     val got = st.orderBy("sig").collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got === Seq(("s1", 3L, 6L), ("s2", 9L, 1L)))
+  }
+
+  test("no committed batch reads as an empty frame of the given schema") {
+    withTempDir { root =>
+      val empty = StructType.fromDDL("k STRING, n BIGINT")
+      val st = KeyedStateSink.read(spark, s"$root/state", empty)
+      assert(st.schema === empty)
+      assert(st.isEmpty)
+    }
   }
 }
